@@ -21,10 +21,10 @@ import pandas as pd
 
 # -- sizes (fixed per workload: every request has the same shape) ----------
 
-TILE_BATCHES = 2
-TILES_PER_BATCH = 300
+TILE_BATCHES = 1  # one batch keeps the slowest set-up of the three short
+TILES_PER_BATCH = 900
 FEATURES_PER_TILE = 44
-POINT_BATCHES = 4
+POINT_BATCHES = 2
 ORDERS = 150_000  # sf0.1 orders keys -> images
 SUPPLIERS = 1_000  # sf0.1 supplier keys -> landmarks
 NATIONS = 25  # sf0.1 nation keys -> polygons

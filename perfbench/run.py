@@ -1,6 +1,6 @@
 """Closed-loop benchmark of the engine: one client, one request at a time.
 
-    python3 perfbench/run.py --workload tile_shave --seed 1 --seconds 6 --trace 0
+    python3 perfbench/run.py --workload tile_shave --seed 1 --seconds 5 --trace 0
 
 ``--trace 0`` reports the end-to-end metrics; ``--trace 1`` alternates
 traced and untraced requests and reports the per-layer metrics, the
@@ -24,9 +24,6 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 WORK = ROOT / "perfbench" / "out"
 
-SETUPS = 3  # set-ups per run; setup_s is their median
-WARM_MIN, WARM_MAX = 2, 3  # warm-up requests after the set-ups
-WARM_GAIN = 0.9  # warm once a request is no more than 10% faster than the one before
 MIN_REQUESTS = 3
 
 END_TO_END = {
@@ -126,14 +123,22 @@ def _descendants(root: int) -> set:
 
 
 def peak_rss_mb(spark) -> float:
-    """Summed VmHWM of this driver, the JVM and the JVM's live Python workers."""
+    """Summed VmHWM of this driver and the JVM's live Python workers, plus
+    the JVM's own: its VmHWM outside the pre-touched heap, plus the peak
+    use of each heap pool. The heap is touched whole at start, so its
+    VmHWM alone would not move when the engine's heap use grows."""
     jvm = int(spark._jvm.java.lang.ProcessHandle.current().pid())
     workers = _descendants(jvm)
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    heap_kb = mf.getMemoryMXBean().getHeapMemoryUsage().getCommitted() >> 10
+    heap_peak_kb = sum(p.getPeakUsage().getUsed() for p in mf.getMemoryPoolMXBeans()
+                       if p.getType().name() == "HEAP") >> 10
     driver, jvm_kb = _proc_status(os.getpid(), "VmHWM"), _proc_status(jvm, "VmHWM")
     workers_kb = sum(_proc_status(p, "VmHWM") for p in workers)
-    log(f"VmHWM: driver {driver >> 10} MB, JVM {jvm_kb >> 10} MB, "
+    log(f"VmHWM: driver {driver >> 10} MB, JVM {jvm_kb >> 10} MB of which heap "
+        f"{heap_kb >> 10} MB (peak use {heap_peak_kb >> 10} MB), "
         f"{len(workers)} Python processes {workers_kb >> 10} MB")
-    return (driver + jvm_kb + workers_kb) / 1024.0
+    return (driver + jvm_kb - heap_kb + heap_peak_kb + workers_kb) / 1024.0
 
 
 # -- session ------------------------------------------------------------------
@@ -154,7 +159,8 @@ def start_session(workload: str):
             "spark.local.dir": str(WORK / "spark-local"),
             # a fixed, pre-touched heap and young generation: otherwise
             # G1 grows them as GC timing dictates, and the JVM's resident
-            # high-water mark follows host speed by hundreds of MB. No
+            # high-water mark follows host speed by hundreds of MB;
+            # peak_rss_mb counts the heap by its peak use instead. No
             # hsperfdata file in /tmp.
             "spark.driver.extraJavaOptions":
                 "-Xms2g -Xmn256m -XX:+AlwaysPreTouch -XX:-UsePerfData "
@@ -299,35 +305,27 @@ def main(argv=None) -> int:
     session_s = time.perf_counter() - t0
     try:
         # set-up: inputs generated, engine inputs built, cached and
-        # filled; repeated SETUPS times, the last build kept
-        preps = []
-        for i in range(SETUPS):
-            t0 = time.perf_counter()
-            wl.generate()
-            gen_s = time.perf_counter() - t0
-            if i == 0:
-                wl.compute_reference()  # off the clock: not part of set-up
-            t0 = time.perf_counter()
-            wl.release()
-            wl.build(spark)
-            preps.append(gen_s + time.perf_counter() - t0)
-            log(f"set-up {i + 1}: {preps[-1]:.2f} s (generate {gen_s:.2f} s)")
+        # filled, then the workload's warm-up requests
         t0 = time.perf_counter()
-        warm = []
-        while len(warm) < WARM_MAX:
-            done = runner.one(len(warm) % wl.batches)
-            warm.append(done[0] if done else float("inf"))
-            if len(warm) >= WARM_MIN and warm[-1] >= WARM_GAIN * warm[-2]:
-                break
-        setup_s = session_s + statistics.median(preps) + time.perf_counter() - t0
-        log(f"session {session_s:.2f} s, warm-up {len(warm)} requests "
-            f"{time.perf_counter() - t0:.2f} s: " + ", ".join(f"{w:.2f}" for w in warm))
+        wl.generate()
+        gen_s = time.perf_counter() - t0
+        wl.compute_reference()  # off the clock: not part of set-up
+        t0 = time.perf_counter()
+        wl.build(spark)
+        build_s = time.perf_counter() - t0
+        t0 = time.perf_counter()
+        warm = [runner.one(i % wl.batches) for i in range(wl.warmup)]
+        warm_s = time.perf_counter() - t0
+        setup_s = session_s + gen_s + build_s + warm_s
+        log(f"set-up: session {session_s:.2f} s, generate {gen_s:.2f} s, build "
+            f"{build_s:.2f} s, warm-up {warm_s:.2f} s: "
+            + ", ".join(f"{w[0]:.2f}" if w else "failed" for w in warm))
 
         measured, traced = [], []
         tracer = Tracer(spark) if args.trace else None
         t_end = time.perf_counter() + args.seconds
         k = 0
-        while time.perf_counter() < t_end or k < MIN_REQUESTS:
+        while time.perf_counter() < t_end or k < MIN_REQUESTS * (2 if tracer else 1):
             # traced runs alternate traced and untraced requests, each
             # kind cycling through every batch
             use_tracer = tracer if tracer and k % 2 == 0 else None
@@ -373,8 +371,10 @@ def main(argv=None) -> int:
             "request_ms_p50": 1e3 * statistics.median(w for w, _ in measured) if measured else 0.0,
             "setup_s": setup_s,
             "peak_rss_mb": rss,
+            # workloads without an encoder report the neutral ratio 1
             "out_bytes_per_in_byte": (sum(r.out_bytes for _, r in measured)
-                                      / max(1, sum(r.in_bytes for _, r in measured))),
+                                      / sum(r.in_bytes for _, r in measured)
+                                      if measured and measured[0][1].in_bytes else 1.0),
         }
         samples = f"{len(measured)} requests"
     print(f"# {args.workload} seed={args.seed} trace={args.trace}: {samples}, "

@@ -54,16 +54,16 @@ def _table(df: pd.DataFrame, maps=()) -> pa.Table:
 
 class Result:
     """What one request returned: the answers the check reads, the items
-    served, the bytes received and given, the DataFrames the public calls
-    returned, and the counters the check found."""
+    served, the DataFrames the public calls returned, the counters the
+    check found and, for tile_shave, the tile bytes sent and received."""
 
-    def __init__(self, items: int, in_bytes: int, out_bytes: int, answers: dict,
-                 call_results: list):
+    def __init__(self, items: int, answers: dict, call_results: list,
+                 in_bytes: int = 0, out_bytes: int = 0):
         self.items = items
-        self.in_bytes = in_bytes
-        self.out_bytes = out_bytes
         self.answers = answers
         self.call_results = call_results
+        self.in_bytes = in_bytes
+        self.out_bytes = out_bytes
         self.counters: dict = {}
         self.rid = self.t_start = self.t_end = self.gc_ms = None
 
@@ -71,12 +71,12 @@ class Result:
 class Workload:
     name = ""
     batches = 1
+    warmup = 0  # requests before measuring: as many as the JIT trend lasts
 
     def __init__(self, seed: int):
         self.seed = seed
         self.cached: list = []
         self.expected: dict = {}
-        self.in_bytes: dict = {}  # batch -> bytes one request sends
 
     def generate(self) -> None:
         raise NotImplementedError
@@ -241,6 +241,7 @@ def tile_summary(blob: bytes) -> dict:
 class TileShave(Workload):
     name = "tile_shave"
     batches = inputs.TILE_BATCHES
+    warmup = 8
 
     def generate(self):
         self.rows = inputs.feature_rows(self.seed)
@@ -251,7 +252,7 @@ class TileShave(Workload):
             encode_tiles_mvt(features, compress=GZIP, tile_cols=("batch", "z", "x", "y"))
         )
         sizes = self.tiles.groupBy("batch").agg(F.sum(F.length("tile"))).collect()
-        self.in_bytes = {r[0]: r[1] for r in sizes}
+        self.in_bytes = {r[0]: r[1] for r in sizes}  # batch -> gzip bytes sent
 
     def compute_reference(self):
         for b, rows in self.rows.groupby("batch"):
@@ -283,8 +284,8 @@ class TileShave(Workload):
             (z, x, y): blob
             for z, x, y, blob in zip(*(out.column(c).to_pylist() for c in ("z", "x", "y", "tile")))
         }
-        return Result(inputs.TILES_PER_BATCH, self.in_bytes[batch],
-                      sum(len(b) for b in blobs.values()), blobs, [tiles])
+        return Result(inputs.TILES_PER_BATCH, blobs, [tiles], self.in_bytes[batch],
+                      sum(len(b) for b in blobs.values()))
 
     def check(self, batch, res):
         want = self.expected[batch]
@@ -325,6 +326,7 @@ def _image_key(image_id):
 class SpatialJoin(Workload):
     name = "spatial_join"
     batches = inputs.POINT_BATCHES
+    warmup = 5
 
     def generate(self):
         self.points = inputs.images(self.seed)
@@ -364,7 +366,6 @@ class SpatialJoin(Workload):
             self.samples[b] = sorted(knn)
             self.expected[b] = {"cells": cells, "pairs": pairs, "knn": knn,
                                 "points": len(pts)}
-            self.in_bytes[b] = inputs.nbytes(pts[["image_id", "lon", "lat"]])
 
     def request(self, batch, tracer, rid):
         pts = self.images.filter(F.col("batch") == batch).select("image_id", "lon", "lat")
@@ -386,8 +387,7 @@ class SpatialJoin(Workload):
                     "image_id", "rank", "landmark_id", "dist"))).alias("s"),
             ).toArrow()
         return Result(
-            self.expected[batch]["points"], self.in_bytes[batch],
-            got_cells.nbytes + got_pairs.nbytes + got_knn.nbytes,
+            self.expected[batch]["points"],
             {"cells": got_cells, "pairs": got_pairs, "knn": got_knn},
             [cells, joined, knn],
         )
@@ -431,6 +431,7 @@ def _bloom_ref(df):
 class TextDedup(Workload):
     name = "text_dedup"
     batches = inputs.DOC_BATCHES
+    warmup = 7
 
     def generate(self):
         self.docs = inputs.documents(self.seed)
@@ -448,7 +449,6 @@ class TextDedup(Workload):
             survivors = np.sort(docs[~docs.text.isin(set(ref.text))].doc_id.to_numpy())
             self.expected[b] = {"keepers": keepers, "survivors": survivors,
                                 "docs": len(docs)}
-            self.in_bytes[b] = inputs.nbytes(docs[["doc_id", "text"]])
 
     def request(self, batch, tracer, rid):
         docs = self.corpus.filter(F.col("batch") == batch).select("doc_id", "text")
@@ -466,8 +466,7 @@ class TextDedup(Workload):
         with tracer.span("operators.bloom", "action", rid):
             survivors = clean.select("doc_id").toArrow()
         return Result(
-            self.expected[batch]["docs"], self.in_bytes[batch],
-            keepers.nbytes + survivors.nbytes + 8,  # 8: the candidate count
+            self.expected[batch]["docs"],
             {"keepers": keepers, "pairs": n_pairs, "survivors": survivors},
             [exact, pairs, clean],
         )
